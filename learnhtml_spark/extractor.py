@@ -1,20 +1,17 @@
 """Single-document extraction surface (reference extractor.py:6-44).
 
 The distributed path is operators/extract.py; this is the convenience
-wrapper for one document — same kernels, same model — returning the
-positive nodes' XPaths (the reference's ``extract_from_html`` contract)
-or the ordered content block texts.
+wrapper for one document.  It runs the same classifier kernel
+(``classify_blocks``, the scoring half of ``extract_rows``) on a
+one-document batch and returns the positive nodes' XPaths (the
+reference's ``extract_from_html`` contract) or the ordered content block
+texts.
 """
 
 from __future__ import annotations
 
-import numpy as np
-
-from learnhtml_spark.htmlparse import getpath, parse_html
-from learnhtml_spark.kernels.blockify import blocks_from_tree
-from learnhtml_spark.kernels.features import extract_features_from_tree
 from learnhtml_spark.model import NodeClassifier
-from learnhtml_spark.training import BLOCK_STAT_COLUMNS, add_block_stats, block_stats_list
+from learnhtml_spark.operators.extract import classify_blocks
 
 
 class HTMLExtractor:
@@ -23,40 +20,26 @@ class HTMLExtractor:
         self.depth = depth
         self.height = height
 
-    def _score_blocks(self, html: str):
-        root = parse_html(html)
-        if root is None:
-            return [], []
-        blocks = blocks_from_tree(root, do_css=False)
-        if not blocks:
-            return [], []
-        starts = {id(b.features["block_start_element"]) for b in blocks}
-        feats = extract_features_from_tree(
-            root, self.depth, self.height, select_nodes=starts
+    def _content_blocks(self, html: str) -> list[tuple]:
+        """(block, path) of every block classified as content, in document
+        order.  Raises ValueError with the kernel's error text when the
+        document fails."""
+        span = {"kind": "html", "text": html, "media_ref": None, "offset": 0}
+        scored, errors = classify_blocks(
+            [(None, [span])], self.model, self.depth, self.height
         )
-        feats = add_block_stats(feats, block_stats_list(blocks))
-        pred = np.asarray(self.model.predict(feats), dtype=bool)
-        positive = set(feats["path"][pred])
-        return blocks, positive
+        if errors:
+            raise ValueError(errors[0][2])
+        _, blocks, paths, positive, _, _ = scored[0]
+        return [(b, p) for b, p in zip(blocks, paths) if p in positive]
 
     def extract_from_html(self, html: str) -> list[str]:
         """XPaths of content nodes (prediction == 1), document order."""
-        blocks, positive = self._score_blocks(html)
-        out = []
-        for b in blocks:
-            p = getpath(b.features["block_start_element"])
-            if p in positive and p not in out:
-                out.append(p)
-        return out
+        return list(dict.fromkeys(p for _, p in self._content_blocks(html)))
 
     def extract_text_blocks(self, html: str) -> list[str]:
         """Ordered content block texts."""
-        blocks, positive = self._score_blocks(html)
-        return [
-            b.text
-            for b in blocks
-            if getpath(b.features["block_start_element"]) in positive
-        ]
+        return [b.text for b, _ in self._content_blocks(html)]
 
     @classmethod
     def load(cls, path: str, **kw) -> "HTMLExtractor":

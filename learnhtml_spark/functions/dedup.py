@@ -883,7 +883,13 @@ def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
     collapses each partition to one row per doc before the single
     shuffle; the signature is assembled from the vote sums post-agg and
     cast to bigint explicitly so SQL oracles (DuckDB sum → HUGEINT)
-    compare exactly."""
+    compare exactly.
+
+    ``bits`` must be in 1..60: the votes read the leading ``bits/4`` hex
+    digits of each token's md5 as one signed long, and 16 digits (61-64
+    bits) overflow it."""
+    if not 1 <= bits <= 60:
+        raise ValueError(f"simhash bits must be in 1..60 (got {bits})")
     # ONE base-16 conversion of the leading bits/4 hex chars per token
     # (materialized in a prior projection so it cannot be re-evaluated
     # per vote), then each vote is a cheap shift/and: hex char j

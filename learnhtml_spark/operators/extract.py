@@ -4,13 +4,25 @@ The serving pipeline (reference lifecycle 3.1/3.3 re-expressed Spark-first):
 
     spark.read (docs table: doc_id, spans)
       → [optional] repartition(hash(doc_id) [+ salt])     # giant-page skew
-      → mapInPandas(parse + blockify + featurize + broadcast-model predict)
+      → mapInPandas(extract_rows: parse + blockify + featurize +
+                    broadcast-model predict + assemble)
       → ordered (doc_id, kind, text, media_ref, offset) span rows
+
+One classifier kernel: ``extract_rows`` is the whole per-batch body, with
+no Spark dependency.  ``extract_content_spans`` calls it once per Arrow
+batch, the single-stage WARC classifier path
+(``sources/warc_run.warc_classifier_spans_fused``) once per batch of
+archives, and the single-document ``HTMLExtractor`` reads the same scored
+blocks through ``classify_blocks``, its parse-to-predict half.  A document
+that raises anywhere in the kernel becomes one ``kind='error'`` row
+(``error_row``) instead of a failed task.
 
 Design notes for 100 TB scale:
 - ONE mapInPandas stage does everything per document — no explode of parsed
   nodes into a distributed table, no join between features and predictions,
   zero shuffles in the default plan (scan → map → write).
+- ONE model call per Arrow batch: features of every document in the batch
+  are merged into one frame before ``predict``.
 - The model is shipped once per executor via ``SparkContext.broadcast`` of
   the serialized artifact; deserialized lazily per python worker.
 - Documents never split across partitions (rows are atomic), matching the
@@ -21,7 +33,8 @@ Design notes for 100 TB scale:
 
 from __future__ import annotations
 
-from typing import Iterator
+from itertools import chain, compress
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -30,7 +43,10 @@ from pyspark.sql import functions as F
 
 from learnhtml_spark.htmlparse import getpath, parse_html
 from learnhtml_spark.kernels.blockify import blocks_from_tree
-from learnhtml_spark.kernels.features import extract_features_from_tree
+from learnhtml_spark.kernels.features import (
+    extract_features_from_tree,
+    feature_columns,
+)
 from learnhtml_spark.kernels.labeling import (
     NON_CONTENT_BLOCK_RATIO,
     get_ratios_per_html,
@@ -42,7 +58,7 @@ from learnhtml_spark.schemas import (
     node_features_schema,
 )
 from learnhtml_spark.spans import assemble_output, html_from_spans, media_spans
-from learnhtml_spark.training import add_block_stats, block_stats_frame
+from learnhtml_spark.training import BLOCK_STAT_COLUMNS, block_stats_list
 
 
 #: per-python-worker deserialized model cache (workers handle many tasks;
@@ -65,6 +81,18 @@ def _load_model(key, payload: bytes) -> NodeClassifier:
     return model
 
 
+def broadcast_model(
+    spark: SparkSession, model: NodeClassifier | bytes
+) -> Callable[[], NodeClassifier]:
+    """Broadcast the serialized model once; the returned loader runs on
+    the python workers and deserializes it at most once per worker."""
+    payload = model if isinstance(model, (bytes, bytearray)) else model.to_bytes()
+    payload = bytes(payload)
+    bc = spark.sparkContext.broadcast(payload)
+    key = ("model", len(payload), hash(payload[:512]), hash(payload[-512:]))
+    return lambda: _load_model(key, bc.value)
+
+
 def _spans_list(value) -> list[dict]:
     """Normalize an Arrow-transferred spans cell into a list of dicts."""
     if value is None:
@@ -76,6 +104,102 @@ def _spans_list(value) -> list[dict]:
         else:  # pyspark Row
             out.append(s.asDict())
     return out
+
+
+def error_row(doc_id, exc: Exception) -> tuple:
+    """The auditable row a poison document becomes: kind='error',
+    offset=-1; filtered by consumers, counted into lineage error_count."""
+    return (doc_id, "error", f"{type(exc).__name__}: {exc}"[:500], None, -1)
+
+
+def _merge_columns(col_dicts: list[dict], keys: Iterable[str]) -> dict:
+    """Concatenate per-document column dicts into one dict of columns, so
+    one pandas frame is built per BATCH, not per doc: the constructor on
+    100+ columns costs ~4× the feature kernel itself when built per doc."""
+    merged = {}
+    for k in keys:
+        if isinstance(col_dicts[0][k], np.ndarray):
+            merged[k] = np.concatenate([d[k] for d in col_dicts])
+        else:
+            merged[k] = list(chain.from_iterable(d[k] for d in col_dicts))
+    return merged
+
+
+def classify_blocks(
+    pairs: Iterable[tuple], clf, depth: int = 5, height: int = 5
+) -> tuple[list[tuple], list[tuple]]:
+    """Score the blocks of every (doc_id, spans) document with ONE model
+    call.
+
+    Per document: spans → parse → blockify → block paths → features of the
+    block-start nodes → block stats; then one batched ``predict`` over the
+    blocks of all documents.  Returns (scored, errors): ``scored`` holds
+    (doc_id, blocks, block_paths, positive_paths, boundaries, media) per
+    document, in input order; a document that raised is one ``error_row``
+    in ``errors`` instead."""
+    cols = feature_columns(depth, height) + BLOCK_STAT_COLUMNS
+    no_stats = [0.0] * len(BLOCK_STAT_COLUMNS)
+    scored, errors = [], []
+    col_dicts = []  # feature columns of each document that has blocks
+    owners = []  # the positive-path set of each feature row's document
+    for doc_id, spans in pairs:
+        try:
+            spans = _spans_list(spans)
+            html, boundaries = html_from_spans(spans)
+            media = media_spans(spans)
+            root = parse_html(html) if html else None
+            blocks = blocks_from_tree(root, do_css=False) if root is not None else []
+            block_paths = [getpath(b.features["block_start_element"]) for b in blocks]
+            positive = set()
+            if blocks:
+                starts = {id(b.features["block_start_element"]) for b in blocks}
+                d = extract_features_from_tree(
+                    root, depth, height, select_nodes=starts, as_columns=True
+                )
+                stats = block_stats_list(blocks)
+                for name, vals in zip(
+                    BLOCK_STAT_COLUMNS,
+                    zip(*(stats.get(p) or no_stats for p in d["path"])),
+                ):
+                    d[name] = np.asarray(vals, dtype=np.float64)
+                col_dicts.append(d)
+                owners.extend([positive] * len(d["path"]))
+            scored.append((doc_id, blocks, block_paths, positive, boundaries, media))
+        except Exception as exc:  # noqa: BLE001 — per-doc isolation
+            errors.append(error_row(doc_id, exc))
+
+    if col_dicts:
+        merged = _merge_columns(col_dicts, cols)
+        pred = np.asarray(
+            clf.predict(pd.DataFrame(merged, columns=cols)), dtype=bool
+        )
+        for positive, path in compress(zip(owners, merged["path"]), pred):
+            positive.add(path)
+    return scored, errors
+
+
+def extract_rows(
+    pairs: Iterable[tuple], clf, depth: int = 5, height: int = 5
+) -> list[tuple]:
+    """The classifier extraction kernel: (doc_id, spans) documents →
+    ordered (doc_id, kind, text, media_ref, offset) rows.
+
+    ``classify_blocks`` scores every document's blocks in one model call;
+    the positive blocks are then assembled with the media spans in reading
+    order.  ``doc_id`` is opaque: it is only copied into the rows.  A
+    document that raises yields one ``error_row`` and no other rows."""
+    scored, rows = classify_blocks(pairs, clf, depth, height)
+    for doc_id, blocks, block_paths, positive, boundaries, media in scored:
+        try:
+            content = [
+                (b.text, b.features["block_start_element"].srcpos)
+                for b, p in zip(blocks, block_paths)
+                if p in positive
+            ]
+            rows.extend(assemble_output(doc_id, content, boundaries, media))
+        except Exception as exc:  # noqa: BLE001 — per-doc isolation
+            rows.append(error_row(doc_id, exc))
+    return rows
 
 
 def repartition_docs(
@@ -104,108 +228,18 @@ def extract_content_spans(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """The flagship operator: classify each document's blocks and emit the
-    ordered content+media span sequence."""
-    spark = docs.sparkSession
-    payload = model if isinstance(model, (bytes, bytearray)) else model.to_bytes()
-    payload = bytes(payload)
-    bc = spark.sparkContext.broadcast(payload)
-    model_key = ("model", len(payload), hash(payload[:512]), hash(payload[-512:]))
+    ordered content+media span sequence (``extract_rows`` per Arrow
+    batch)."""
+    load = broadcast_model(docs.sparkSession, model)
 
     if num_partitions:
         docs = repartition_docs(docs, num_partitions)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from itertools import chain
-
-        from learnhtml_spark.kernels.features import feature_columns
-        from learnhtml_spark.training import BLOCK_STAT_COLUMNS, block_stats_list
-
-        clf = _load_model(model_key, bc.value)
-        cols = ["doc_id", "kind", "text", "media_ref", "offset"]
-        feat_cols = feature_columns(depth, height)
+        clf = load()
         for pdf in batches:
-            # phase 1: parse + blockify + featurize every doc in the batch;
-            # features collected as raw column dicts (one pandas frame is
-            # built per BATCH, not per doc — construction cost dominates
-            # otherwise)
-            parsed = []  # (doc_id, blocks, block_paths, boundaries, media)
-            col_dicts = []
-            doc_keys = []
-            error_rows = []  # poison documents must never kill the job
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                try:
-                    spans = _spans_list(spans)
-                    html, boundaries = html_from_spans(spans)
-                    media = media_spans(spans)
-                    root = parse_html(html) if html else None
-                    blocks = (
-                        blocks_from_tree(root, do_css=False)
-                        if root is not None
-                        else []
-                    )
-                    block_paths = [
-                        getpath(b.features["block_start_element"]) for b in blocks
-                    ]
-                    if blocks:
-                        starts = {
-                            id(b.features["block_start_element"]) for b in blocks
-                        }
-                        d = extract_features_from_tree(
-                            root, depth, height, select_nodes=starts, as_columns=True
-                        )
-                        stats = block_stats_list(blocks)
-                        for name, vals in zip(
-                            BLOCK_STAT_COLUMNS,
-                            zip(*(stats.get(p, None) or [0.0] * len(BLOCK_STAT_COLUMNS)
-                                  for p in d["path"])),
-                        ):
-                            d[name] = np.asarray(vals, dtype=np.float64)
-                        col_dicts.append(d)
-                        doc_keys.extend([doc_id] * len(d["path"]))
-                    parsed.append((doc_id, blocks, block_paths, boundaries, media))
-                except Exception as exc:  # noqa: BLE001 — per-doc isolation
-                    # auditable error row: kind='error', offset=-1; filtered
-                    # by consumers, counted into lineage error_count
-                    error_rows.append(
-                        (doc_id, "error", f"{type(exc).__name__}: {exc}"[:500],
-                         None, -1)
-                    )
-
-            # phase 2: ONE vectorized model call for the whole Arrow batch
-            positive_by_doc: dict = {}
-            if col_dicts:
-                merged = {}
-                for k in feat_cols + BLOCK_STAT_COLUMNS:
-                    first = col_dicts[0][k]
-                    if isinstance(first, np.ndarray):
-                        merged[k] = np.concatenate([d[k] for d in col_dicts])
-                    else:
-                        merged[k] = list(chain.from_iterable(d[k] for d in col_dicts))
-                allbf = pd.DataFrame(merged, columns=feat_cols + BLOCK_STAT_COLUMNS)
-                pred = np.asarray(clf.predict(allbf), dtype=bool)
-                for d, p in zip(
-                    np.asarray(doc_keys, dtype=object)[pred],
-                    np.asarray(merged["path"], dtype=object)[pred],
-                ):
-                    positive_by_doc.setdefault(d, set()).add(p)
-
-            # phase 3: assemble ordered output spans per doc
-            rows = list(error_rows)
-            for doc_id, blocks, block_paths, boundaries, media in parsed:
-                try:
-                    positive = positive_by_doc.get(doc_id, set())
-                    content = [
-                        (b.text, b.features["block_start_element"].srcpos)
-                        for b, p in zip(blocks, block_paths)
-                        if p in positive
-                    ]
-                    rows.extend(assemble_output(doc_id, content, boundaries, media))
-                except Exception as exc:  # noqa: BLE001
-                    rows.append(
-                        (doc_id, "error", f"{type(exc).__name__}: {exc}"[:500],
-                         None, -1)
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+            rows = extract_rows(zip(pdf["doc_id"], pdf["spans"]), clf, depth, height)
+            yield pd.DataFrame(rows, columns=EXTRACTED_SPANS.fieldNames())
 
     return docs.mapInPandas(run, schema=EXTRACTED_SPANS)
 
@@ -219,12 +253,7 @@ def extract_node_features(
     names = schema.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from itertools import chain
-
         for pdf in batches:
-            # column dicts per doc, ONE DataFrame per batch: the pandas
-            # constructor on 100+ columns costs ~4× the feature kernel
-            # itself when built per doc
             col_dicts = []
             doc_ids = []
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
@@ -238,15 +267,8 @@ def extract_node_features(
                 col_dicts.append(d)
                 doc_ids.extend([doc_id] * len(d["path"]))
             if col_dicts:
-                merged = {"doc_id": doc_ids}
-                for k in col_dicts[0]:
-                    first = col_dicts[0][k]
-                    if isinstance(first, np.ndarray):
-                        merged[k] = np.concatenate([d[k] for d in col_dicts])
-                    else:
-                        merged[k] = list(
-                            chain.from_iterable(d[k] for d in col_dicts)
-                        )
+                merged = _merge_columns(col_dicts, col_dicts[0])
+                merged["doc_id"] = doc_ids
                 out = pd.DataFrame(merged, columns=names)
             else:
                 out = pd.DataFrame(columns=names)

@@ -118,10 +118,9 @@ def heuristic_extract_spans(docs: DataFrame) -> DataFrame:
     extraction, no predict), so this is the cheap first-pass strip for
     pipelines that reserve the classifier for ambiguous pages.
     """
-    from learnhtml_spark.operators.extract import _spans_list
+    from learnhtml_spark.operators.extract import _spans_list, error_row
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "kind", "text", "media_ref", "offset"]
         for pdf in batches:
             rows = []
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
@@ -130,10 +129,7 @@ def heuristic_extract_spans(docs: DataFrame) -> DataFrame:
                         extract_spans_heuristic_doc(doc_id, _spans_list(spans))
                     )
                 except Exception as exc:  # noqa: BLE001 — per-doc isolation
-                    rows.append(
-                        (doc_id, "error", f"{type(exc).__name__}: {exc}"[:500],
-                         None, -1)
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+                    rows.append(error_row(doc_id, exc))
+            yield pd.DataFrame(rows, columns=EXTRACTED_SPANS.fieldNames())
 
     return docs.mapInPandas(run, schema=EXTRACTED_SPANS)

@@ -69,7 +69,6 @@ def write_extraction_run(
     from learnhtml_spark.operators.extract import extract_content_spans
 
     spark = docs.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     done = completed_buckets(spark, base_path, run_id)
     all_buckets = list(range(num_buckets))
@@ -90,9 +89,11 @@ def write_extraction_run(
     t0 = time.time()
     out = extract_content_spans(batch, model_bytes)
     out = out.withColumn("bucket", bucket_col(num_buckets))
-    out.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(base_path, "spans")
-    )
+    # per-write dynamic overwrite: only the pending buckets' partitions
+    # are replaced, without changing the caller's session configuration
+    out.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(os.path.join(base_path, "spans"))
     wall_ms = int((time.time() - t0) * 1000)
 
     # per-bucket metrics from the landed output + the input doc counts

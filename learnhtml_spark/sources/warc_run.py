@@ -6,12 +6,17 @@ lineage + metrics.  Here the natural unit of work, checkpointing, AND
 output partitioning is the archive file (the CommonCrawl convention —
 production crawl jobs track a manifest of processed WARC paths):
 
-- one task per archive, end-to-end: WARC framing -> gzip members ->
-  HTTP decode -> parser -> blockifier -> density rules -> ordered spans
-  in ONE ``mapInPandas`` (``warc_heuristic_spans_fused``) — the archive
+- one task per archive, end-to-end, in ONE ``mapInPandas``: WARC
+  framing -> gzip members (``decode_archive``) -> HTTP decode ->
+  interleaved assembly -> either the density rules
+  (``warc_heuristic_spans_fused``) or the classifier kernel
+  ``extract_rows``, called once on every document of the Arrow batch
+  (``warc_classifier_spans_fused``) -> ordered spans.  The archive
   column rides through the kernel natively, so per-archive metrics need
   no join and the whole job runs with zero exchanges besides the final
-  per-archive metric aggregate;
+  per-archive metric aggregate.  On both paths a damaged record, a
+  poison archive or a poison document becomes a ``kind='error'`` row,
+  counted into the archive's lineage ``error_count``;
 - output is ``partitionBy(archive)`` with dynamic partition overwrite:
   re-processing an archive atomically replaces exactly its own files
   (the parquet stand-in for Iceberg ``overwritePartitions``);
@@ -45,7 +50,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from learnhtml_spark.sources.warc_source import assemble_interleaved, parse_warc
+from learnhtml_spark.operators.extract import (
+    broadcast_model,
+    error_row,
+    extract_rows,
+)
+from learnhtml_spark.sources.warc_source import assemble_interleaved, decode_archive
 
 WARC_SPANS = StructType(
     [
@@ -74,107 +84,69 @@ WARC_LINEAGE = StructType(
 )
 
 
+def _archive_docs(pdf: pd.DataFrame, rows: list) -> Iterator[tuple[str, list]]:
+    """Decode each (path, content) archive row of ``pdf`` and yield
+    (archive basename, [(uri, spans)]) per archive.  Archive-level and
+    record-level failures are appended to ``rows`` as error rows."""
+    for path, content in zip(pdf["path"], pdf["content"]):
+        base = os.path.basename(path)
+        try:
+            records = decode_archive(path, content)
+        except Exception as exc:  # noqa: BLE001 — archive-level poison
+            rows.append((base, *error_row("", exc)))
+            continue
+        docs, errors = assemble_interleaved(records)
+        rows.extend((base, uri, "error", err, None, -1) for uri, err in errors)
+        yield base, docs
+
+
 def warc_heuristic_spans_fused(raw: DataFrame) -> DataFrame:
     """(path, content) archive rows -> ordered heuristic spans with the
     archive basename attached.  One task per archive, zero exchanges;
     per-document and per-archive failures become auditable error rows
     (the media_features poison contract), never task failures."""
-    import gzip
-
     from learnhtml_spark.operators.heuristic import extract_spans_heuristic_doc
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in WARC_SPANS.fields]
         for pdf in batches:
             rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                base = os.path.basename(path)
-                data = bytes(content)
-                try:
-                    if path.endswith(".gz"):
-                        data = gzip.decompress(data)
-                    records = parse_warc(data)
-                except Exception as exc:  # archive-level poison
-                    rows.append(
-                        (base, "", "error",
-                         f"{type(exc).__name__}: {exc}"[:500], None, -1)
-                    )
-                    continue
-                docs, errors = assemble_interleaved(records)
-                rows.extend(
-                    (base, uri, "error", err, None, -1) for uri, err in errors
-                )
+            for base, docs in _archive_docs(pdf, rows):
                 for uri, spans in docs:
                     try:
                         rows.extend(
                             (base, *r)
                             for r in extract_spans_heuristic_doc(uri, spans)
                         )
-                    except Exception as exc:  # per-document poison
-                        rows.append(
-                            (base, uri, "error",
-                             f"{type(exc).__name__}: {exc}"[:500], None, -1)
-                        )
-            yield pd.DataFrame(rows, columns=cols)
+                    except Exception as exc:  # noqa: BLE001 — per-doc poison
+                        rows.append((base, *error_row(uri, exc)))
+            yield pd.DataFrame(rows, columns=WARC_SPANS.fieldNames())
 
     return raw.mapInPandas(run, schema=WARC_SPANS)
 
 
-#: separator packing the archive basename into doc_id across the
-#: classifier kernel (tab cannot appear in an archive basename or URL
-#: written by any sane crawler; guarded at pack time)
-_KEY_SEP = "\t"
-
-
 def warc_classifier_spans_fused(raw: DataFrame, model_bytes: bytes) -> DataFrame:
-    """Classifier-model variant of the fused run: per archive, the SAME
-    interleaved assembly, then the golden-tested batched classifier
-    kernel (operators/extract.py:extract_content_spans) — reused
-    verbatim by packing the archive basename into the doc key (split
-    back afterwards), so the whole path stays zero-shuffle and the
-    model's Arrow-batch phase-2 predict batching is preserved."""
-    import gzip
+    """Classifier-model variant of the fused run, in the same single
+    ``mapInPandas``: every archive of an Arrow batch is decoded and
+    assembled as in the heuristic path, then ONE ``extract_rows`` call
+    classifies all of the batch's documents (one model call per batch).
+    Documents are keyed by (archive, uri), so the archive column needs no
+    packing into doc_id; damaged records, poison archives and poison
+    documents become the same error rows as the heuristic path."""
+    load = broadcast_model(raw.sparkSession, model_bytes)
 
-    from learnhtml_spark.operators.extract import extract_content_spans
-
-    def assemble(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        clf = load()
         for pdf in batches:
             rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                base = os.path.basename(path)
-                if _KEY_SEP in base:
-                    raise ValueError(f"archive name contains tab: {base!r}")
-                data = bytes(content)
-                try:
-                    if path.endswith(".gz"):
-                        data = gzip.decompress(data)
-                    docs, _errors = assemble_interleaved(parse_warc(data))
-                except Exception:  # archive-level poison: no docs
-                    continue
-                rows.extend(
-                    (f"{base}{_KEY_SEP}{uri}", spans) for uri, spans in docs
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "spans"])
+            keyed = [
+                ((base, uri), spans)
+                for base, docs in _archive_docs(pdf, rows)
+                for uri, spans in docs
+            ]
+            rows.extend((*key, *r) for key, *r in extract_rows(keyed, clf))
+            yield pd.DataFrame(rows, columns=WARC_SPANS.fieldNames())
 
-    from learnhtml_spark.sources.warc_source import WARC_DOCS
-
-    docs = raw.mapInPandas(assemble, schema=WARC_DOCS)
-    spans = extract_content_spans(docs, model_bytes)
-    key = F.split_part(F.col("doc_id"), F.lit(_KEY_SEP), F.lit(1))
-    # everything after the FIRST separator is the URI — a tab inside a
-    # URI stays part of it instead of silently truncating the doc_id
-    # (the basename itself is guarded against tabs at pack time)
-    url = F.expr(
-        f"substring(doc_id, length(split_part(doc_id, '{_KEY_SEP}', 1)) + 2)"
-    )
-    return spans.select(
-        key.alias("archive"),
-        url.alias("doc_id"),
-        "kind",
-        "text",
-        "media_ref",
-        "offset",
-    )
+    return raw.mapInPandas(run, schema=WARC_SPANS)
 
 
 def _read_lineage(spark: SparkSession, base_path: str) -> DataFrame:

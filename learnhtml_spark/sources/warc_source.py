@@ -271,6 +271,17 @@ def parse_warc(data: bytes) -> list[tuple[dict, bytes, str | None]]:
     return out
 
 
+def decode_archive(path: str, content) -> list[tuple[dict, bytes, str | None]]:
+    """Archive file bytes -> ``parse_warc`` records.  A ``.gz`` archive is
+    gunzipped first (stdlib ``gzip.decompress`` concatenates the
+    one-per-record members, RFC 1952).  Raises on a corrupt gzip stream:
+    the callers turn that into their archive-level error row."""
+    data = bytes(content)
+    if path.endswith(".gz"):
+        data = gzip.decompress(data)
+    return parse_warc(data)
+
+
 def parse_http_response(block: bytes) -> tuple[int, str, bytes]:
     """(status, content_type, body) from an application/http block."""
     sep = block.find(CRLF + CRLF)
@@ -323,11 +334,8 @@ def read_warc_dir(spark: SparkSession, directory: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for path, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
                 try:
-                    if path.endswith(".gz"):
-                        data = gzip.decompress(data)
-                    records = parse_warc(data)
+                    records = decode_archive(path, content)
                 except Exception as exc:  # archive-level poison
                     rows.append(
                         (path, -1, None, None, None, None, None,
@@ -419,9 +427,7 @@ def fetch_record(path: str, offset: int, length: int) -> tuple[dict, bytes]:
     with open(path, "rb") as f:
         f.seek(offset)
         raw = f.read(length)
-    if path.endswith(".gz"):
-        raw = gzip.decompress(raw)
-    records = parse_warc(raw)
+    records = decode_archive(path, raw)
     if not records or records[0][2] is not None:
         raise ValueError(f"no valid record at {path}:{offset}+{length}")
     hdrs, block, _ = records[0]
@@ -548,11 +554,8 @@ def read_warc_docs(spark: SparkSession, directory: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for path, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
                 try:
-                    if path.endswith(".gz"):
-                        data = gzip.decompress(data)
-                    records = parse_warc(data)
+                    records = decode_archive(path, content)
                 except Exception:  # archive-level poison: no docs
                     continue
                 docs, _errors = assemble_interleaved(records)

@@ -74,6 +74,19 @@ def test_simhash_single_shuffle(docs):
     assert dict(simhash(docs).dtypes)["simhash"] == "bigint"
 
 
+def test_simhash_rejects_uncomputable_bits(docs):
+    """61-64 bits need 16 hex digits, which overflow the signed long."""
+    from learnhtml_spark.functions.dedup import simhash, simhash_neardup
+
+    for bits in (0, 61, 64):
+        with pytest.raises(ValueError, match="1..60"):
+            simhash(docs, bits=bits)
+    with pytest.raises(ValueError, match="1..60"):
+        simhash_neardup(docs, bits=64, max_hamming=3, n_blocks=8)
+    sig = [r["simhash"] for r in simhash(docs, bits=60).collect()]
+    assert all(0 <= s < (1 << 60) for s in sig)
+
+
 def test_minhash_lsh_candidates(docs):
     from learnhtml_spark.functions.dedup import minhash_lsh_candidates
 

@@ -44,6 +44,33 @@ def test_extract_content_spans_equality(spark, fixture_docs, fixture_model):
         assert [r.offset for r in got] == list(range(len(got))), name
 
 
+def test_single_doc_extractor_matches_distributed(spark, fixture_docs):
+    """HTMLExtractor and extract_content_spans run one kernel: the same
+    content texts per page, with a model not fitted to these pages."""
+    import importlib.resources as res
+
+    from learnhtml_spark.exact_model import load_any_model
+    from learnhtml_spark.extractor import HTMLExtractor
+
+    model = load_any_model(
+        (res.files("learnhtml_spark") / "artifacts" / "model.npz").read_bytes()
+    )
+    pairs = [
+        (name, split_html_to_spans(html, n_chunks=5))
+        for name, html, _ in fixture_docs
+    ]
+    rows = extract_content_spans(docs_from_pairs(spark, pairs), model).collect()
+    ex = HTMLExtractor(model)
+    for name, html, _ in fixture_docs:
+        texts = [
+            r.text
+            for r in sorted(rows, key=lambda r: r.offset)
+            if r.doc_id == name and r.kind == "text"
+        ]
+        assert texts, name
+        assert ex.extract_text_blocks(html) == texts, name
+
+
 def test_extract_content_spans_empty_and_mediaonly(spark, fixture_model):
     pairs = [
         ("empty", []),

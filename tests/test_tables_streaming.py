@@ -52,6 +52,32 @@ def test_write_extraction_run_resume(spark, fixture_docs, fixture_model, tmp_pat
     assert lin.agg(F.sum("doc_count")).collect()[0][0] == len(fixture_docs)
 
 
+def test_write_extraction_run_keeps_session_conf(
+    spark, fixture_docs, fixture_model, tmp_path
+):
+    """Dynamic partition overwrite is a per-write option: the session's
+    setting is unchanged, and a later call keeps earlier buckets under a
+    static session setting."""
+    from learnhtml_spark.operators.extract import docs_from_pairs
+    from learnhtml_spark.sources.tables import write_extraction_run
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        docs = docs_from_pairs(spark, _pairs(fixture_docs))
+        base = str(tmp_path / "out")
+        mb = fixture_model.to_bytes()
+        write_extraction_run(docs, mb, base, "r", num_buckets=4,
+                             max_buckets_per_call=2)
+        write_extraction_run(docs, mb, base, "r", num_buckets=4)
+        assert spark.conf.get(key) == "static"
+        spans = spark.read.parquet(os.path.join(base, "spans"))
+        assert spans.select("doc_id").distinct().count() == len(fixture_docs)
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_stream_extract_available_now(spark, fixture_docs, fixture_model, tmp_path):
     from learnhtml_spark.operators.extract import docs_from_pairs
     from learnhtml_spark.streaming.extract_stream import stream_extract

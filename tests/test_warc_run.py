@@ -3,14 +3,21 @@ incremental catch-up of newly landed archives, per-archive lineage
 metrics, and poison-archive accounting."""
 
 import hashlib
+import importlib.resources as res
 import os
 import shutil
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(__file__))
 
-from learnhtml_spark.sources.warc_run import write_warc_run
+from learnhtml_spark.sources.warc_run import (
+    warc_classifier_spans_fused,
+    write_warc_run,
+)
 from learnhtml_spark.sources.warc_source import (
+    build_record,
     build_warc,
     synth_media_for,
     synth_response_for,
@@ -92,19 +99,46 @@ def test_run_resume_and_catchup(spark, tmp_path):
     assert sum(r.span_count for r in lin) == 2 * (n200 + len(new_ids)) + all_media
 
 
-def test_poison_archive_is_lineage_error_count(spark, tmp_path):
-    d, ids = _archive_dir(tmp_path, n_files=1)
+def _packaged_model() -> bytes:
+    return (res.files("learnhtml_spark") / "artifacts" / "model.npz").read_bytes()
+
+
+@pytest.mark.parametrize("classifier", [False, True], ids=["heuristic", "classifier"])
+def test_poison_archive_is_lineage_error_count(spark, tmp_path, classifier):
+    """A damaged record and a poison archive are one error row each, on
+    the heuristic and the classifier path alike, and lineage counts them."""
+    d, _ = _archive_dir(tmp_path, n_files=1)
+    damaged = synth_url("damaged_0")
+    good = d / "part-00000.warc"
+    good.write_bytes(
+        good.read_bytes()
+        + build_record(
+            "response",
+            {"WARC-Target-URI": damaged},
+            b"garbage without an http header separator",
+        )
+    )
     (d / "bad.warc.gz").write_bytes(b"\x1f\x8b\x08\x00not-really-gzip")
     base = str(tmp_path / "out")
-    s = write_warc_run(spark, str(d), base, "r1")
-    assert len(s["processed"]) == 2 and s["errors"] == 1
+    model_bytes = _packaged_model() if classifier else None
+    s = write_warc_run(spark, str(d), base, "r1", model_bytes=model_bytes)
+    assert len(s["processed"]) == 2 and s["errors"] == 2
+    errors = (
+        spark.read.parquet(os.path.join(base, "spans"))
+        .filter("kind = 'error'")
+        .collect()
+    )
+    assert sorted((r.archive, r.doc_id, r.offset) for r in errors) == [
+        ("bad.warc.gz", "", -1),
+        ("part-00000.warc", damaged, -1),
+    ]
     lin = {
         r.archive: r
         for r in spark.read.parquet(os.path.join(base, "lineage")).collect()
     }
     assert lin["bad.warc.gz"].error_count == 1
     assert lin["bad.warc.gz"].doc_count == 0
-    assert lin["part-00000.warc"].error_count == 0
+    assert lin["part-00000.warc"].error_count == 1
 
 
 def test_max_archives_batching(spark, tmp_path):
@@ -119,17 +153,13 @@ def test_max_archives_batching(spark, tmp_path):
 def test_classifier_extractor_path(spark, tmp_path):
     d, ids = _archive_dir(tmp_path, n_files=2)
     base = str(tmp_path / "out")
-    import importlib.resources as res
-
-    model_bytes = (
-        res.files("learnhtml_spark") / "artifacts" / "model.npz"
-    ).read_bytes()
+    model_bytes = _packaged_model()
     s = write_warc_run(spark, str(d), base, "r1", model_bytes=model_bytes)
     assert len(s["processed"]) == 2 and s["errors"] == 0
     spans = spark.read.parquet(os.path.join(base, "spans"))
     rows = spans.collect()
     n200 = sum(1 for i in ids if synth_response_for(i)[0] == 200)
-    # archive/doc keys unpacked correctly; no error rows; media carried
+    # archive/doc keys carried correctly; no error rows; media carried
     assert {r.archive for r in rows} <= {"part-00000.warc", "part-00001.warc.gz"}
     assert all(r.kind in ("text", "media") for r in rows)
     urls = {r.doc_id for r in rows}
@@ -141,3 +171,9 @@ def test_classifier_extractor_path(spark, tmp_path):
     s2 = write_warc_run(spark, str(d), base, "r1", model_bytes=model_bytes)
     assert s2["processed"] == [] and len(s2["skipped"]) == 2
     assert n200 > 0
+    # archive decode and the classifier kernel share ONE mapInPandas: the
+    # documents never cross the Arrow boundary a second time
+    raw = spark.read.format("binaryFile").load(str(d)).select("path", "content")
+    plan = warc_classifier_spans_fused(raw, model_bytes)._jdf.queryExecution()
+    assert plan.executedPlan().toString().count("MapInPandas") == 1
+
